@@ -19,7 +19,8 @@ object Bench {
     // query happens to run first; the tiny parquet read initializes the
     // Hadoop FS + parquet reader stack (otherwise billed to the first query)
     spark.range(2000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    // (a missing corpus is left to the query rows, which record it as failed)
+    scala.util.Try(spark.read.parquet(s"$sfDir/region.parquet").count())
     // string-expression JIT warmup: UTF8String intrinsics (upper/regexp/
     // reverse/pad) cost ~2 s of C2 compilation on their first heavy run,
     // which otherwise lands on whichever string query executes first
@@ -57,6 +58,10 @@ object Bench {
     // Pass 1 only — within-row reps would count the row riding its own
     // first rep, which is rep mechanics, not cross-row sharing.
     val memoHits = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    // a query that throws is a failed row, never a timed one: it is named
+    // under "failed", left out of the re-runs and the total, and the run
+    // exits non-zero once the artifact is written
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def onePass(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         recordHits: Boolean = false): Double = {
       if (coldBands) graft.operators.Dedup.clearBandMemo()
@@ -66,7 +71,7 @@ object Bench {
       // noop sink: materializes every output column (count() would let
       // Catalyst prune the query down to the rows that survive)
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); failed += name }
       if (Memo.misses > m0) firstTouch += name
       if (recordHits && Memo.hits > h0) memoHits(name) = Memo.hits - h0
       (System.nanoTime() - t0) / 1e9
@@ -85,12 +90,12 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     val probeFloor = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROBE_FLOOR_SEC", "1.0").toDouble
     val lookup = queries.toMap
-    val runs: Map[String, Seq[Double]] = pass1.map { case (name, t1) =>
+    val runs: Map[String, Seq[Double]] = pass1.collect { case (name, t1) if !failed(name) =>
       if (reps <= 1 || t1 < probeFloor) name -> Seq(t1)
       else name -> (t1 +: (2 to reps).map(_ => onePass(name, lookup(name))))
     }.toMap
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
-    val results = pass1.map { case (name, _) => name -> median(runs(name)) }
+    val results = pass1.collect { case (name, _) if !failed(name) => name -> median(runs(name)) }
     val spread = results.collect { case (name, _) if runs(name).size > 1 =>
       name -> (runs(name).max - runs(name).min) }
     // explicit ROOT locale: the f-interpolator uses the JVM default locale,
@@ -117,6 +122,7 @@ object Bench {
       .mkString("{", ",", "}")
     val breachJson =
       s""","ceiling_sec":${fmt(ceiling)},"breaches":[${breaches.map("\"" + _ + "\"").mkString(",")}]""" +
+        s""","failed":[${failed.map("\"" + _ + "\"").mkString(",")}]""" +
         s""","first_touch":[${firstTouch.distinct.map("\"" + _ + "\"").mkString(",")}]""" +
         s""","memo_hits":$memoHitsJson""" +
         s""","reps":$reps,"probe_floor_sec":${fmt(probeFloor)},"cold_bands":$coldBands"""
@@ -134,5 +140,6 @@ object Bench {
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -26,6 +26,9 @@ import graft.sharing.{QueryJob, WorkSharingExecutor}
   */
 object ShareBench {
 
+  /** Rethrow the first failed job of a `runBatch` window, so a timed cell
+    * never counts a failure as a fast run. */
+  private def ok(window: Map[String, scala.util.Try[Any]]): Unit = window.values.foreach(_.get)
 
   /** Build-once 10× replica corpus for the family rows. The base tag lives
     * in the DIRECTORY PATH (ADVICE r8): the r7 fix tagged only the marker
@@ -111,8 +114,8 @@ object ShareBench {
 
     // warm-up: one batch of each workload through the executor path (JIT for
     // the generator, the noop sink, and the cache write path)
-    new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(workloads.head._2, 2))
-    new WorkSharingExecutor(spark).runBatch(jobs(workloads.last._2, 2))
+    ok(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(workloads.head._2, 2)))
+    ok(new WorkSharingExecutor(spark).runBatch(jobs(workloads.last._2, 2)))
     spark.catalog.clearCache()
 
     // min of 3 reps per cell: single-shot timings are dominated by GC from
@@ -128,9 +131,9 @@ object ShareBench {
       (wname, build) <- workloads if only(wname)
       win <- Seq(2, 5, 10)
     } yield {
-      val sep = best(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(build, win)))
-      val cachedT = best(new WorkSharingExecutor(spark).runBatch(jobs(build, win)))
-      val mergedT = best(new WorkSharingExecutor(spark, autoMerge = true).runBatch(jobs(build, win)))
+      val sep = best(ok(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(jobs(build, win))))
+      val cachedT = best(ok(new WorkSharingExecutor(spark).runBatch(jobs(build, win))))
+      val mergedT = best(ok(new WorkSharingExecutor(spark, autoMerge = true).runBatch(jobs(build, win))))
       spark.catalog.clearCache()
       s"""{"workload":"$wname","window":$win,"separate":$sep,"cached":$cachedT,"merged":$mergedT}"""
     }
@@ -159,10 +162,10 @@ object ShareBench {
       ).map { case (n, b) => QueryJob[Unit](n, b, noop) }
       val frag = Seq("lsh_pairs" ->
         ((s: SparkSession) => Dedup.d04MinhashLshPairs(T(s, sfDir))))
-      val sepD = best(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(dedupJobs))
+      val sepD = best(ok(new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(dedupJobs)))
       val fragD = best {
         val ex = new WorkSharingExecutor(spark)
-        try ex.runBatch(dedupJobs, frag) finally ex.shutdown()
+        try ok(ex.runBatch(dedupJobs, frag)) finally ex.shutdown()
       }
       lines2 += s"""{"workload":"dedup_family","window":5,"separate":$sepD,"fragment_shared":$fragD}"""
     }
@@ -227,10 +230,10 @@ object ShareBench {
       // single-slot execution measures it directly (same trade the
       // reference benched on a contended 17-node YARN queue).
       val (sepS, fragS) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(simJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(simJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(simJobs, simFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(simJobs, simFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"similarity_family","window":8,"separate":$sepS,"fragment_shared":$fragS}"""
     }
     // text family: five analysis queries that all contain the
@@ -255,10 +258,10 @@ object ShareBench {
         "doc_tokens"      -> (s => TextAnalysis.docTokens(T(s, txtDir))),
         "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, txtDir))))
       val (sepT, fragT) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(txtJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(txtJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(txtJobs, txtFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(txtJobs, txtFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"text_family","window":5,"separate":$sepT,"fragment_shared":$fragT}"""
     }
     // multimodal family: the decode-once-analyze-many scenario. m01 (per-
@@ -283,10 +286,10 @@ object ShareBench {
       val mmFrags = Seq[(String, SparkSession => DataFrame)](
         "media_features" -> (s => Multimodal.mediaFeatures(T(s, mmDir))))
       val (sepM, fragM) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(mmJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(mmJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(mmJobs, mmFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(mmJobs, mmFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"multimodal_family","window":3,"separate":$sepM,"fragment_shared":$fragM}"""
     }
     // curation family: the funnel (p29) literally CONTAINS p11's quality
@@ -312,10 +315,10 @@ object ShareBench {
         "quality_flags" -> (s => Pipeline.qualityFlags(T(s, curDir))),
         "five_grams"    -> (s => Pipeline.fiveGrams(T(s, curDir).documents)))
       val (sepC, fragC) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(curJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(curJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(curJobs, curFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(curJobs, curFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"curation_family","window":4,"separate":$sepC,"fragment_shared":$fragC}"""
     }
     // graph family: every graph query recomputes the LSH pair graph before
@@ -342,10 +345,10 @@ object ShareBench {
       val gFrags = Seq[(String, SparkSession => DataFrame)](
         "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, gDir))))
       val (sepG, fragG) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(gJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(gJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(gJobs, gFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(gJobs, gFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"graph_family","window":6,"separate":$sepG,"fragment_shared":$fragG}"""
     }
     // ownership family (r12): the cross-door reuse the snapshot-memoized
@@ -403,10 +406,10 @@ object ShareBench {
         "ivf_assigned" -> (s => Sim.ivfAssignedRaw(T(s, iDir))),
         "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, iDir))))
       val (sepI, fragI) = pairedMedian(spark)(
-        new WorkSharingExecutor(spark, budgetBytes = 0L,
-          maxConcurrency = 1).runBatch(iJobs),
+        ok(new WorkSharingExecutor(spark, budgetBytes = 0L,
+          maxConcurrency = 1).runBatch(iJobs)),
         { val ex = new WorkSharingExecutor(spark, budgetBytes = 0L, maxConcurrency = 1)
-          try ex.runBatch(iJobs, iFrags) finally ex.shutdown() })
+          try ok(ex.runBatch(iJobs, iFrags)) finally ex.shutdown() })
       lines2 += s"""{"workload":"ivf_family","window":4,"separate":$sepI,"fragment_shared":$fragI}"""
     }
     (lines ++ lines2).foreach(println)

@@ -63,20 +63,21 @@ object ShareProbe {
     cached.foreach(_.unpersist())
 
     // same comparison through runBatch itself (concurrent job execution,
-    // detector, scheduler) — isolates executor mechanics from plan effects
+    // detector, scheduler) — isolates executor mechanics from plan effects;
+    // `.get` rethrows a failed job instead of timing it
     val qjobs = jobs.map { case (n, b) => QueryJob[Unit](n, b, noop) }
     spark.catalog.clearCache()
     time("runBatch separate (warm)") {
-      new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(qjobs)
+      new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(qjobs).values.foreach(_.get)
     }
     spark.catalog.clearCache()
     time("runBatch shared (warm)") {
       val ex = new WorkSharingExecutor(spark, budgetBytes = 0L)
-      try ex.runBatch(qjobs, frags) finally ex.shutdown()
+      try ex.runBatch(qjobs, frags).values.foreach(_.get) finally ex.shutdown()
     }
     spark.catalog.clearCache()
     time("runBatch separate (warm2)") {
-      new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(qjobs)
+      new WorkSharingExecutor(spark, budgetBytes = 0L).runBatch(qjobs).values.foreach(_.get)
     }
     spark.stop()
   }

@@ -3,6 +3,7 @@ package graft.sharing
 import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
+import scala.util.{Failure, Success, Try}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -171,69 +172,6 @@ object ShareDetector {
           relation = r)
     }.toSeq
   }
-
-  /** A non-leaf subplan shared by >= 2 jobs: the subplan-granularity
-    * upgrade of [[detect]] for PURE plans (fragments that a build-time
-    * checkpoint has erased must be declared instead — see runBatch). */
-  final case class FragmentGroup(fingerprint: String, plan: LogicalPlan,
-                                 jobNames: Seq[String], nNodes: Int)
-
-  /** Canonically-equal expensive subtrees (Join / Aggregate / Window roots)
-    * appearing in >= 2 jobs' analyzed plans. Only deterministic, fully
-    * declarative subtrees qualify (no LogicalRDD leaves — those are
-    * per-build identities that can never match a sibling). Nested shared
-    * fragments are dropped in favor of the largest enclosing shared one. */
-  def fragments(jobs: Seq[(String, DataFrame)]): Seq[FragmentGroup] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate => LAgg, Join => LJoin, Window => LWin}
-    def expensive(p: LogicalPlan): Boolean = p match {
-      case _: LJoin | _: LAgg | _: LWin => true
-      case _ => false
-    }
-    def pure(p: LogicalPlan): Boolean =
-      !p.exists(n => n.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] ||
-        n.expressions.exists(e => e.exists(!_.deterministic)))
-    // Group by semantic hash BUT confirm with canonicalized-plan equality
-    // (sameResult) before merging (ADVICE r6): a bare hashCode key would
-    // conflate two distinct subplans on collision — the second plan would
-    // silently never be cached and its jobs would be attributed to the
-    // wrong group. Result correctness was never at stake (substitution
-    // goes through CacheManager plan equality), but the sharing DECISION
-    // must not be collision-dependent. Colliding-but-different plans get
-    // "-k" suffixed fingerprints so downstream cache keys stay distinct.
-    final case class Entry(plan: LogicalPlan, names: mutable.ListBuffer[String])
-    val byHash = mutable.LinkedHashMap.empty[Int, mutable.ListBuffer[Entry]]
-    jobs.foreach { case (name, df) =>
-      val subs = df.queryExecution.analyzed.collect {
-        case p if expensive(p) && pure(p) => p
-      }
-      val seen = mutable.ListBuffer.empty[LogicalPlan] // per-job dedup, exact
-      subs.foreach { p =>
-        if (!seen.exists(_.sameResult(p))) {
-          seen += p
-          val bucket = byHash.getOrElseUpdate(p.semanticHash(), mutable.ListBuffer.empty)
-          bucket.find(_.plan.sameResult(p)) match {
-            case Some(e) => e.names += name
-            case None    => bucket += Entry(p, mutable.ListBuffer(name))
-          }
-        }
-      }
-    }
-    val shared = byHash.iterator.flatMap { case (h, entries) =>
-      entries.zipWithIndex.collect {
-        case (e, i) if e.names.size >= 2 =>
-          val fp = if (entries.size == 1) h.toString else s"$h-$i"
-          FragmentGroup(fp, e.plan, e.names.toSeq, e.plan.collect { case _ => 1 }.size)
-      }
-    }.toSeq.sortBy(-_.nNodes)
-    // keep maximal fragments only: a subtree of an already-kept shared
-    // fragment is computed inside that fragment's cache anyway
-    val kept = mutable.ListBuffer.empty[FragmentGroup]
-    shared.foreach { g =>
-      val nested = kept.exists(k => k.plan.exists(_.sameResult(g.plan)))
-      if (!nested) kept += g
-    }
-    kept.toSeq
-  }
 }
 
 /** Per-fragment share/don't-share economics, MEASURED (VERDICT r7 next-6:
@@ -311,38 +249,23 @@ object FragmentGate {
   def clear(): Unit = probes.clear()
 }
 
-/** Cache-or-not policy: stats-backed replacement for the reference's
-  * random-coin ScanCachingCM. */
-final class SharePolicy(budgetBytes: Long) {
-  /** Share (cache) iff the relation fits the remaining budget. Groups are
-    * considered in descending (reuseCount * size) order — best payoff first. */
-  def choose(groups: Seq[ScanGroup]): Seq[ScanGroup] = {
-    var remaining = BigInt(budgetBytes)
-    groups
-      .sortBy(g => -(g.sizeBytes * g.jobNames.size))
-      .filter { g =>
-        val ok = g.sizeBytes <= remaining
-        if (ok) remaining -= g.sizeBytes
-        ok
-      }
-  }
-}
-
 /** Batched work-sharing executor over one shared SparkSession.
   *
-  * With `autoMerge` on, the window first runs [[AutoMerge]]: compatible
-  * aggregate jobs collapse into one FILTER-aggregate meta-plan (one scan,
-  * one shuffle); everything else executes unmerged but still shares cached
-  * scans — the two rewrites composing is the reference's hybrid slot
-  * (§2.1 #19, a stub there). */
+  * Every window shares cached scans and, when declared, subplan fragments
+  * behind [[FragmentGate]]. With `autoMerge` on, the window also runs
+  * [[AutoMerge]], the one merge path: compatible aggregate jobs collapse
+  * into one FILTER-aggregate meta-plan (one scan, one shuffle); everything
+  * else executes unmerged but still shares cached scans — the two rewrites
+  * composing is the reference's hybrid slot (§2.1 #19, a stub there).
+  *
+  * Jobs fail alone: a job whose build or action throws gets its own
+  * `Failure` and the rest of its window still returns its answers. */
 final class WorkSharingExecutor(
     spark: SparkSession,
     budgetBytes: Long = 2L * 1024 * 1024 * 1024,
     maxConcurrency: Int = 8,
-    autoMerge: Boolean = false,
-    subplanSharing: Boolean = false) {
+    autoMerge: Boolean = false) {
 
-  private val policy = new SharePolicy(budgetBytes)
   /** fingerprint -> (cached scan DF, size, last-used batch). */
   private val cached = mutable.LinkedHashMap.empty[String, (DataFrame, BigInt, Long)]
   private var batchNo = 0L
@@ -353,8 +276,9 @@ final class WorkSharingExecutor(
       (r: Runnable) => { val t = new Thread(r, "graft-sharing"); t.setDaemon(true); t }))
 
   /** Run one window of jobs with scan sharing; returns each job's action
-    * result. Semantics are identical to running each job in isolation (the
-    * metamorphic property the spec asserts).
+    * result, or the failure of its own build or action. Semantics are
+    * identical to running each job in isolation (the metamorphic property
+    * the spec asserts).
     *
     * `sharedFragments` extends sharing from scan granularity to SUBPLAN
     * granularity (the reference's MuxRDD "one RDD, N pipelines" idea one
@@ -369,7 +293,7 @@ final class WorkSharingExecutor(
     * the expensive subplans worth sharing. */
   def runBatch[A](jobs: Seq[QueryJob[A]],
                   sharedFragments: Seq[(String, SparkSession => DataFrame)] = Nil)
-      : Map[String, A] = synchronized {
+      : Map[String, Try[A]] = synchronized {
     batchNo += 1
     val kappa = spark.conf.getOption("spark.graft.share.fragmentReadPenalty")
       .map(_.toDouble).getOrElse(FragmentGate.DefaultKappa)
@@ -423,36 +347,18 @@ final class WorkSharingExecutor(
         }
       }
     }
-    val built = jobs.map(j => (j.name, j.build(spark)))
+    // every job builds here, in window order, before any action starts; a
+    // build that throws fails its own job and stays out of scan detection
+    val builds = jobs.map(j => j.name -> Try(j.build(spark)))
+    val built = builds.collect { case (n, Success(df)) => (n, df) }
     val byName = jobs.map(j => j.name -> j).toMap
     val (mergeGroups, unmergedNames) =
       if (autoMerge) AutoMerge.detect(built)
       else (Seq.empty[Seq[(String, AutoMerge.Shape)]], built.map(_._1))
-    // automatic subplan sharing (opt-in): canonically-equal Join/Aggregate/
-    // Window subtrees across >= 2 built plans are cached once; Catalyst's
-    // CacheManager substitutes them into every sibling at first execution.
-    // Complements declared fragments: this sees only PURE plans (a build-
-    // time checkpoint leaves LogicalRDDs nothing can match).
-    if (subplanSharing) {
-      ShareDetector.fragments(built).foreach { g =>
-        val fp = s"autofrag:${g.fingerprint}"
-        if (!cached.contains(fp)) {
-          val df = org.apache.spark.sql.GraftSqlShim.ofRows(spark, g.plan)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          cached.put(fp, (df, df.queryExecution.optimizedPlan.stats.sizeInBytes, batchNo))
-        } else {
-          val (df, sz, _) = cached(fp)
-          cached.update(fp, (df, sz, batchNo))
-        }
-      }
-    }
-    val groups = ShareDetector.detect(spark, built)
-    val toShare = policy.choose(groups)
 
     // Rewrite = persist the shared relation; Catalyst's CacheManager
     // substitutes the InMemoryRelation into every sibling plan automatically.
-    toShare.foreach { g =>
+    chooseScans(ShareDetector.detect(spark, built)).foreach { g =>
       if (!cached.contains(g.fingerprint)) {
         val scan = org.apache.spark.sql.GraftSqlShim.ofRows(spark, g.relation)
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -473,31 +379,41 @@ final class WorkSharingExecutor(
     // happens lazily at first execution, and a rebuild would make an
     // eager-build job (checkpointing operators) pay its build twice.
     val builtByName = built.toMap
-    val singleFutures = unmergedNames.map(byName).map { j =>
-      j.name -> Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", j.meta.pool)
-        try j.action(builtByName(j.name))
-        finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-      }
+    def act(n: String, df: DataFrame): Try[A] = Try(byName(n).action(df))
+    def inPool[T](meta: JobMeta)(body: => T): T = {
+      spark.sparkContext.setLocalProperty("spark.scheduler.pool", meta.pool)
+      try body finally spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
     }
-    // each merge group = one meta-job: materialize once, split per member
-    val groupFutures = mergeGroups.map { group =>
-      Future {
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-          group.map(g => byName(g._1).meta).maxBy(_.priority).pool)
-        val merged = AutoMerge.mergedPlan(spark, group)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+    val singles = unmergedNames.map { n =>
+      Seq(n) -> Future(inPool(byName(n).meta)(Seq(n -> act(n, builtByName(n)))))
+    }
+    // each merge group = one meta-job: materialize once, split per member;
+    // a member whose split fails reruns on its own built plan
+    val merges = mergeGroups.map { group =>
+      group.map(_._1) -> Future(inPool(group.map(g => byName(g._1).meta).maxBy(_.priority)) {
+        val merged = Try(AutoMerge.mergedPlan(spark, group).persist(StorageLevel.MEMORY_AND_DISK))
         try group.map { case (n, sh) =>
-          n -> byName(n).action(AutoMerge.split(merged, n, sh))
-        }.toMap
-        finally {
-          merged.unpersist(blocking = false)
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
-        }
-      }
+          n -> merged.flatMap(m => act(n, AutoMerge.split(m, n, sh))).orElse(act(n, builtByName(n)))
+        } finally merged.foreach(_.unpersist(blocking = false))
+      })
     }
-    singleFutures.map { case (n, f) => n -> Await.result(f, 30.minutes) }.toMap ++
-      groupFutures.flatMap(f => Await.result(f, 30.minutes))
+    val failedBuilds: Seq[(String, Try[A])] =
+      builds.collect { case (n, Failure(e)) => n -> Failure(e) }
+    (failedBuilds ++ (singles ++ merges).flatMap { case (names, f) =>
+      Try(Await.result(f, 30.minutes)).fold(e => names.map(_ -> Failure(e)), identity)
+    }).toMap
+  }
+
+  /** Cache-or-not, the stats-backed replacement for the reference's
+    * random-coin ScanCachingCM: share (cache) a relation iff it fits the
+    * remaining budget, best payoff (reuseCount * size) first. */
+  private def chooseScans(groups: Seq[ScanGroup]): Seq[ScanGroup] = {
+    var remaining = BigInt(budgetBytes)
+    groups.sortBy(g => -(g.sizeBytes * g.jobNames.size)).filter { g =>
+      val ok = g.sizeBytes <= remaining
+      if (ok) remaining -= g.sizeBytes
+      ok
+    }
   }
 
   /** LRU eviction — the reference unpersisted *everything* between windows
@@ -563,9 +479,10 @@ final class BatchWindow[A](
       if (batch.nonEmpty) {
         val jobs = batch.toSeq
         try {
-          // pre-scheduling: admission order within the window
+          // pre-scheduling: admission order within the window; each
+          // promise completes with its own job's result or failure
           val results = executor.runBatch(strategy.order(jobs.map(_.job)))
-          jobs.foreach(p => p.promise.success(results(p.job.name)))
+          jobs.foreach(p => p.promise.complete(results(p.job.name)))
         } catch {
           case e: Throwable => jobs.foreach(_.promise.tryFailure(e))
         }

@@ -281,7 +281,9 @@ class QueryGatewaySpec extends SparkSpec {
         f""""adversarial_stmts":$nAdversarial,"audit_warns":$warnsMain,""" +
         f""""rewrite_clients":$nRewriteClients,"audit_rewrites":$nRewrites}"""
       info(line)
-      java.nio.file.Files.write(java.nio.file.Paths.get("GWSOAK.json"),
+      // under target/: a test run must not rewrite the committed GWSOAK.json
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+      java.nio.file.Files.write(java.nio.file.Paths.get("target", "GWSOAK.json"),
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally { gw.close(); win.close(); ex.shutdown(); spark.catalog.clearCache() }
   }

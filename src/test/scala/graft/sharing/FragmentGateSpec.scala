@@ -3,6 +3,7 @@ package graft.sharing
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Success
 
 /** The measured fragment-economics gate (VERDICT r7 next-6): a declared
   * fragment is cached only when the reuse-aware economics pay —
@@ -38,7 +39,7 @@ class FragmentGateSpec extends SparkSpec {
       val out = ex.runBatch(jobs,
         Seq("gate_cheap" -> cheap, "gate_costly" -> costly))
       // the veto never changes answers — only who computes the subtree
-      assert(out == Map("a" -> 999000L, "b" -> 1998L))
+      assert(out == Map("a" -> Success(999000L), "b" -> Success(1998L)))
       assert(!ex.cachedFingerprints.contains("frag:gate_cheap"), ex.cachedFingerprints)
       assert(ex.cachedFingerprints.contains("frag:gate_costly"), ex.cachedFingerprints)
       val cheapKey = FragmentGate.keyFor("gate_cheap", cheap(spark))
@@ -60,7 +61,7 @@ class FragmentGateSpec extends SparkSpec {
       // second window: the rejected fragment is not re-probed (same verdict
       // object — putIfAbsent memoization) and still not cached
       val p0 = FragmentGate.decision(cheapKey).get
-      ex.runBatch(jobs, Seq("gate_cheap" -> cheap))
+      ex.runBatch(jobs, Seq("gate_cheap" -> cheap)).values.foreach(_.get)
       assert(FragmentGate.decision(cheapKey).get eq p0)
       assert(!ex.cachedFingerprints.contains("frag:gate_cheap"))
       // the verdict is per (name, PLAN): the same label over a DIFFERENT
@@ -83,7 +84,7 @@ class FragmentGateSpec extends SparkSpec {
       ex.runBatch(
         Seq(QueryJob[Long]("a", s => cheap(s).agg(sum("v").as("s")),
           df => df.head().getLong(0))),
-        Seq("gate_cheap_open" -> cheap))
+        Seq("gate_cheap_open" -> cheap)).values.foreach(_.get)
       assert(ex.cachedFingerprints.contains("frag:gate_cheap_open"))
     } finally {
       ex.shutdown()

@@ -1,10 +1,11 @@
 package graft.sharing
 
 import graft.{SparkSpec, T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.util.Success
 
 class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
@@ -51,7 +52,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     try {
       val batched = ex.runBatch(jobs)
       assert(batched.keySet == isolated.keySet)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.size == 1)
     } finally ex.shutdown()
   }
@@ -59,7 +60,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("shared scan is substituted with InMemoryRelation in sibling plans") {
     val ex = new WorkSharingExecutor(spark)
     try {
-      ex.runBatch(jobs)
+      ex.runBatch(jobs).values.foreach(_.get)
       val probe = T(spark, sfDir).lineitem.groupBy("l_returnflag").count()
       assert(probe.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
       val orders = T(spark, sfDir).orders.groupBy("o_orderstatus").count()
@@ -86,7 +87,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ex = new WorkSharingExecutor(spark)
     try {
       val batched = ex.runBatch(v2jobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       // separately-built plans hit the cached relation (value-equal tables)
       val probe = synth(spark).groupBy("lang").count()
       assert(probe.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
@@ -107,7 +108,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       val batched = ex.runBatch(family,
         sharedFragments = Seq("lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the fragment's cache, proving
       // canonical substitution (d15 contains the d04 subtree verbatim)
@@ -137,7 +138,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "s02_ann"         -> (s => Similarity.s02HyperplaneLsh(T(s, sfDir))),
         "sym_scored"      -> (s => Similarity.symScored(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:sym_scored"), ex.cachedFingerprints)
       // siblings built AFTER the batch read the fragment caches, proving
       // canonical substitution across BOTH candidate fragments (probe_cands
@@ -164,7 +165,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "lsh_pairs" -> (s => Dedup.d04MinhashLshPairs(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:lsh_pairs"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the fragment cache
       val probe = Graph.g04DegreeHistogram(T(spark, sfDir))
@@ -184,7 +185,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "ivf_assigned" -> (s => Sim.ivfAssignedRaw(T(s, sfDir))),
         "pq_codes"     -> (s => Sim.pqCodesPacked(T(s, sfDir)))))
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:ivf_assigned"), ex.cachedFingerprints)
       // a sibling built AFTER the batch reads the assignment fragment cache
       val probe = Sim.s04IvfAnn(T(spark, sfDir))
@@ -208,7 +209,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "doc_tokens"      -> (s => TextAnalysis.docTokens(T(s, sfDir))),
         "doc_word_counts" -> (s => TextAnalysis.docWordCounts(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:doc_tokens"), ex.cachedFingerprints)
       // siblings built AFTER the batch read the fragment caches: t16 goes
       // through doc_tokens, t12 through doc_word_counts
@@ -232,7 +233,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
           org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame)](
         "media_features" -> (s => Multimodal.mediaFeatures(T(s, sfDir)))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:media_features"), ex.cachedFingerprints)
       // every sibling contains the mediaFeatures subtree verbatim, so a
       // sibling built AFTER the batch reads the fragment cache — the codec
@@ -257,7 +258,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         "quality_flags" -> (s => Pipeline.qualityFlags(T(s, sfDir))),
         "five_grams"    -> (s => Pipeline.fiveGrams(T(s, sfDir).documents))))
       // metamorphic: shared-fragment batching never changes any answer
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.contains("frag:quality_flags"), ex.cachedFingerprints)
       assert(ex.cachedFingerprints.contains("frag:five_grams"), ex.cachedFingerprints)
       // siblings built AFTER the batch read both fragment caches: p11 goes
@@ -269,38 +270,12 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     } finally { ex.shutdown(); spark.catalog.clearCache() }
   }
 
-  test("automatic subplan sharing caches a shared aggregate subtree once") {
-    // two jobs whose plans contain the SAME aggregate subtree with
-    // different post-processing — scan sharing alone would re-aggregate
-    def baseAgg(s: SparkSession) =
-      T(s, sfDir).lineitem.groupBy("l_returnflag", "l_linestatus")
-        .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))
-    val fragJobs: Seq[QueryJob[Seq[String]]] = Seq(
-      QueryJob("hot_flags", s => baseAgg(s).filter(col("q") > 1000), snap),
-      QueryJob("flag_count", s => baseAgg(s).groupBy("l_returnflag")
-        .agg(sum(col("n")).as("rows")), snap))
-    val built = fragJobs.map(j => (j.name, j.build(spark)))
-    val groups = ShareDetector.fragments(built)
-    assert(groups.size == 1 && groups.head.jobNames.toSet == Set("hot_flags", "flag_count"),
-      groups.map(g => (g.jobNames, g.nNodes)))
-    val isolated = fragJobs.map(j => j.name -> j.action(j.build(spark))).toMap
-    val ex = new WorkSharingExecutor(spark, subplanSharing = true)
-    try {
-      val batched = ex.runBatch(fragJobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
-      assert(ex.cachedFingerprints.exists(_.startsWith("autofrag:")), ex.cachedFingerprints)
-      // a sibling built afterwards reads the fragment cache
-      val probe = baseAgg(spark).filter(col("n") > 5)
-      assert(probe.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
-    } finally { ex.shutdown(); spark.catalog.clearCache() }
-  }
-
   test("zero budget -> no caching, results still correct") {
     val isolated = jobs.map(j => j.name -> j.action(j.build(spark))).toMap
     val ex = new WorkSharingExecutor(spark, budgetBytes = 0L)
     try {
       val batched = ex.runBatch(jobs)
-      batched.foreach { case (name, rows) => assert(rows == isolated(name), s"job $name") }
+      batched.foreach { case (name, rows) => assert(rows == Success(isolated(name)), s"job $name") }
       assert(ex.cachedFingerprints.isEmpty)
     } finally ex.shutdown()
   }
@@ -315,6 +290,48 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
         assert(Await.result(f, 5.minutes) == isolated(name), s"job $name")
       }
     } finally { win.close(); ex.shutdown() }
+  }
+
+  // One failing statement must not fail the others in its window. Both
+  // submissions land in one window: it fires at its second job. Returns
+  // the failing job's own error.
+  private def failsAlone(bad: QueryJob[Seq[String]]): Throwable = {
+    def valid(s: SparkSession) = T(s, sfDir).lineitem.groupBy("l_linestatus").count()
+    val expected = snap(valid(spark))
+    val ex = new WorkSharingExecutor(spark)
+    val win = new BatchWindow[Seq[String]](ex, windowSize = 2, maxWaitMs = 5000)
+    try {
+      val failing = win.submit(bad)
+      val good = win.submit(QueryJob("good", valid, snap))
+      assert(Await.result(good, 5.minutes) == expected)
+      intercept[Exception](Await.result(failing, 5.minutes))
+    } finally { win.close(); ex.shutdown() }
+  }
+
+  test("batch window: a statement on a missing table fails alone") {
+    val e = failsAlone(QueryJob("no_table", _.sql("SELECT * FROM no_such_table"), snap))
+    assert(e.isInstanceOf[AnalysisException] && e.getMessage.contains("no_such_table"), e)
+  }
+
+  test("batch window: a job failing at run time leaves its neighbour's answer") {
+    val e = failsAlone(QueryJob("assert_false",
+      s => T(s, sfDir).lineitem.select(expr("assert_true(l_quantity < 0)")), snap))
+    assert(!e.isInstanceOf[AnalysisException], e)
+  }
+
+  test("merge group: a failing member reruns alone, its partner keeps its answer") {
+    def li = T(spark, sfDir).lineitem
+    val good = li.groupBy("l_linestatus").agg(sum("l_quantity").as("q"))
+    val bad = li.groupBy("l_linestatus")
+      .agg(max(expr("assert_true(l_quantity < 0)")).as("m"))
+    assert(AutoMerge.detect(Seq("good" -> good, "bad" -> bad))._1.size == 1)
+    val ex = new WorkSharingExecutor(spark, autoMerge = true)
+    try {
+      val out = ex.runBatch(Seq(QueryJob("good", _ => good, snap),
+        QueryJob("bad", _ => bad, snap)))
+      assert(out("good") == Success(snap(good)))
+      assert(out("bad").isFailure)
+    } finally ex.shutdown()
   }
 
   test("pre-scheduler: EDF meets a deadline mix that FIFO misses") {
@@ -334,7 +351,7 @@ class WorkSharingSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
             JobMeta(deadlineMs = Some(start + (4 - i) * 1200L)))
         }
         val done = ex.runBatch(strategy.order(dJobs))
-        dJobs.count(j => done(j.name) > j.meta.deadlineMs.get)
+        dJobs.count(j => done(j.name).get > j.meta.deadlineMs.get)
       } finally ex.shutdown()
     }
     val fifoLate = run(FifoStrategy)
